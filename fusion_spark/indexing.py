@@ -39,6 +39,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -68,6 +69,11 @@ class BM25Index:
     n_docs: int
     avgdl: float
     variant: str = "bm25"
+
+    @cached_property
+    def total_postings(self) -> int:
+        """Σ df over all terms: one aggregate, then cached on the index."""
+        return self.termstats.agg(F.sum("df")).first()[0] or 0
 
     def persist(self) -> "BM25Index":
         self.postings.persist()

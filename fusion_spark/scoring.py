@@ -165,15 +165,18 @@ def search(
     return top_k(scored, k, "qid").select("qid", "doc_id", "score", "rank")
 
 
+def _selectivity(index: BM25Index, rows: list) -> float:
+    """Σ df of the distinct terms in `query_term_table` rows / Σ df of all terms."""
+    return sum({r["term"]: r["df"] for r in rows}.values()) / (index.total_postings or 1)
+
+
 def estimate_selectivity(index: BM25Index, queries: DataFrame, mode: str = "simple") -> float:
     """Fraction of the posting store a query batch touches: Σ df(query terms)
-    / Σ df(all terms). The physical-plan chooser's only statistic."""
-    qterms = query_terms(queries, mode=mode).select("term").distinct()
-    touched = (
-        qterms.join(index.termstats, "term").agg(F.sum("df").alias("s")).collect()[0]["s"]
-    ) or 0
-    total = index.termstats.agg(F.sum("df").alias("s")).collect()[0]["s"] or 1
-    return touched / total
+    / Σ df(all terms). The physical-plan chooser's only statistic, from the
+    same query-term table search_auto routes on (collected whole here)."""
+    from fusion_spark.blocks import query_term_table
+
+    return _selectivity(index, query_term_table(index.termstats, queries, mode=mode)[0])
 
 
 def search_auto(
@@ -196,35 +199,36 @@ def search_auto(
     strategy from stats' move, done with the one statistic we keep (df).
 
     Routing is TWO-statistic: besides store selectivity, |queries|·k bounds
-    the WAND path's aggregate heap work — a 10⁶-query offline batch times
-    1000-slot heaps is a join-scorer workload however selective each query
-    is (wand_search would grind through hundreds of chunked passes), so
-    batches over `wand_max_query_work` go straight to the one-plan JVM
-    scorer. The routing count is BOUNDED — `limit(bound+1).count()` instead
-    of a full count() — so a query frame with expensive upstream lineage
-    pays at most bound+1 rows of it for routing, not a full materialization
-    (it only needs to know whether the batch EXCEEDS the bound).
+    the WAND path's aggregate heap work, so batches over
+    `wand_max_query_work` go straight to the one-plan JVM scorer. The bound
+    is clamped to wand_search's capacity (read from its signature), so a
+    batch the chunked WAND planner would refuse takes the join scorer.
 
-    The bound is clamped to wand_search's own hard capacity
-    (max_queries_per_chunk · max_chunks_per_plan): for small k the work
-    budget alone would admit batches the chunked WAND planner refuses
-    (its guard raises above 64 chunk closures), so anything beyond its
-    capacity routes to the join scorer instead of crashing through."""
+    ONE bounded driver collect (`blocks.query_term_table` over
+    queries.limit(bound+1)) serves both statistics and `blocks.wand_pass`,
+    which scores those rows with the index's idf once the driver has checked
+    that `packed` has exactly the index's n_docs, avgdl and variant. A
+    one-query lookup runs 6 Spark jobs on the WAND route and 9 on the exact
+    route (16–17 and 14 before)."""
     import inspect
 
-    from fusion_spark.blocks import wand_search
+    from fusion_spark import blocks
 
     # read wand_search's real defaults so the clamp can never drift from the
     # guard it protects against
-    sig = inspect.signature(wand_search).parameters
-    wand_capacity = (
-        sig["max_queries_per_chunk"].default * sig["max_chunks_per_plan"].default
-    )
-    query_bound = min(wand_max_query_work // max(k, 1), wand_capacity)
-    if packed is not None and queries.limit(query_bound + 1).count() <= query_bound and (
-        estimate_selectivity(index, queries, mode) < wand_threshold
-    ):
-        return wand_search(packed, queries, k=k, k1=k1, b=b, mode=mode)
+    sig = inspect.signature(blocks.wand_search).parameters
+    per_chunk = sig["max_queries_per_chunk"].default
+    query_bound = min(wand_max_query_work // max(k, 1), per_chunk * sig["max_chunks_per_plan"].default)
+    if packed is not None:
+        rows, n_queries = blocks.query_term_table(index.termstats, queries, query_bound + 1, mode)
+        if n_queries <= query_bound and _selectivity(index, rows) < wand_threshold:
+            mine = (index.n_docs, index.avgdl, index.variant)
+            if mine != (packed.n_docs, packed.avgdl, packed.variant):
+                raise ValueError(
+                    f"search_auto: index (n_docs, avgdl, variant) {mine} and packed store "
+                    f"{packed.n_docs, packed.avgdl, packed.variant} describe different corpora"
+                )
+            return blocks.wand_pass(packed, rows, k, k1, b, per_chunk)
     return search(index, queries, k=k, k1=k1, b=b, mode=mode)
 
 

@@ -81,7 +81,9 @@ def incremental_packed_stream(
     Runs availableNow (drain the backlog, quiesce, return); a live
     deployment triggers the same foreachBatch on a processingTime schedule
     and calls `blocks.compact_if` from its own quiesce/maintenance window.
-    Returns (PackedIndex, decision) from `compact_if`.
+    Returns (PackedIndex, decision) from `compact_if`, or (None, "empty")
+    while no micro-batch has packed a shard yet (an empty landing dir, or
+    only zero-row files): there is nothing to serve or compact.
 
     Ingest contract: micro-batch doc-id spans must land on multiples of
     `segment_size` (the id-assignment layer routes by
@@ -91,6 +93,7 @@ def incremental_packed_stream(
     own spans). Interleaved-but-disjoint id layouts bypass the hook and
     call `merge_packed(check_disjoint=False)` from a caller-owned quiesce.
     """
+    import glob
     import os
 
     from fusion_spark.blocks import build_packed, compact_if
@@ -114,6 +117,8 @@ def incremental_packed_stream(
         .start()
     )
     q.awaitTermination()
+    if not glob.glob(os.path.join(store_dir, "shard=*")):
+        return None, "empty"
     return compact_if(spark, store_dir, threshold_files=compact_threshold_files)
 
 

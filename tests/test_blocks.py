@@ -281,19 +281,27 @@ def test_search_auto_clamps_bound_to_wand_capacity(spark, docs_df, queries_df, m
     max_chunks_per_plan chunks) — search_auto must clamp its routing bound to
     wand_search's real capacity and fall back to the join scorer instead of
     crashing through. Capacity is read from wand_search's signature, so a
-    tiny-capacity stand-in exercises the clamp without 65k queries."""
+    tiny-capacity stand-in exercises the clamp without 65k queries. The
+    router runs the WAND pass through `blocks.wand_pass` on the query-term
+    rows it already collected, so that seam records the calls."""
+    import types
+
     import fusion_spark.blocks as blocks
-    from fusion_spark.scoring import search, search_auto
+    from fusion_spark.scoring import search_auto
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     calls = []
 
     def tiny_wand(packed, queries, *, k=10, k1=1.5, b=0.75, mode="simple",
                   max_queries_per_chunk=2, max_chunks_per_plan=2):
-        calls.append(k)
-        return search(idx, queries, k=k, k1=k1, b=b, mode=mode)
+        raise AssertionError("search_auto reads wand_search's capacity, never calls it")
+
+    def recording_pass(packed, rows, k, k1, b, max_queries_per_chunk):
+        calls.append((k, max_queries_per_chunk))
+        return spark.createDataFrame([], "qid long, doc_id long, score double, rank int")
 
     monkeypatch.setattr(blocks, "wand_search", tiny_wand)
+    monkeypatch.setattr(blocks, "wand_pass", recording_pass)
 
     class _Poison:
         def __getattr__(self, name):  # pragma: no cover - only on wrong route
@@ -305,9 +313,78 @@ def test_search_auto_clamps_bound_to_wand_capacity(spark, docs_df, queries_df, m
                       wand_max_query_work=2_000_000)
     assert calls == [] and out.count() > 0
     # at-or-below capacity the WAND path stays reachable under the same knobs
-    search_auto(idx, object(), queries_df.limit(4), k=1, wand_threshold=1.1,
+    # (a stand-in store with the index's corpus stats passes the corpus check)
+    same = types.SimpleNamespace(n_docs=idx.n_docs, avgdl=idx.avgdl, variant=idx.variant)
+    search_auto(idx, same, queries_df.limit(4), k=1, wand_threshold=1.1,
                 wand_max_query_work=2_000_000).collect()
-    assert calls == [1]
+    assert calls == [(1, 2)]
+
+
+@pytest.mark.parametrize(
+    "field,value", [("n_docs", 63), ("avgdl", 30.0), ("variant", "tfidf")]
+)
+def test_search_auto_rejects_store_of_another_corpus(spark, docs_df, queries_df, field, value):
+    """The WAND route scores with the index's idf over the store's blocks, so
+    search_auto refuses a store whose n_docs, avgdl or variant differ from
+    the index's — with a specific error, before any WAND job runs. The exact
+    route never reads the store."""
+    import dataclasses
+
+    from fusion_spark.scoring import search_auto
+
+    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    packed = PackedIndex.from_index(idx, segment_size=16)
+    other = dataclasses.replace(packed, **{field: value})
+    with pytest.raises(ValueError, match="different corpora"):
+        search_auto(idx, other, queries_df, k=5, wand_threshold=1.1)
+    assert search_auto(idx, other, queries_df, k=5, wand_threshold=0.0).count() > 0
+
+
+def test_query_term_table_counts_query_rows_read(spark):
+    """The routing table's second value decides whether limit() cut the
+    batch, so it counts query ROWS — duplicate qids, OOV-only and empty
+    questions included — also when no term survives the termstats join."""
+    from fusion_spark.blocks import query_term_table
+
+    ts = spark.createDataFrame([("a", 1, 0.5)], "term string, df long, idf double")
+    q = spark.createDataFrame(
+        [(1, "a b"), (2, "zz"), (2, "a a"), (3, "")], "qid long, question string"
+    )
+    rows, n = query_term_table(ts, q)
+    assert n == 4 and sorted(map(tuple, rows)) == [("a", 1, 1, 1, 0.5), ("a", 2, 2, 1, 0.5)]
+    assert query_term_table(ts, q, limit=2)[1] == 2
+    assert query_term_table(ts, q.filter("question = 'zz'"), limit=5) == ([], 1)
+    assert query_term_table(ts, q.filter("false"), limit=5) == ([], 0)
+
+
+def test_search_auto_job_budget(spark, docs_df, tmp_path):
+    """A single-query lookup's Spark jobs, counted through its job group on
+    each route over an on-disk store and a materialized index (the lookup
+    benchmark's setting): one bounded query-term collect, then the WAND
+    pass or the exact join. A new probe collect on either route fails here."""
+    from fusion_spark.scoring import search_auto
+
+    idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
+    idx.termstats.persist()
+    idx.termstats.count()
+    PackedIndex.from_index(idx, segment_size=16).write(str(tmp_path / "store"))
+    packed = PackedIndex.read(spark, str(tmp_path / "store"))
+    term = idx.termstats.orderBy("df", "term").first()["term"]
+    q = spark.createDataFrame([(1, f"{term} {term}")], "qid long, question string")
+    sc = spark.sparkContext
+
+    def jobs(route: str, threshold: float) -> int:
+        group = f"job-budget-{route}"
+        sc.setJobGroup(group, group)
+        try:
+            search_auto(idx, packed, q, k=5, wand_threshold=threshold).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    search_auto(idx, packed, q, k=5).collect()  # first lookup: caches Σ df
+    assert jobs("wand", 1.1) <= 6
+    assert jobs("exact", 0.0) <= 9
 
 
 def test_pack_group_spanning_arrow_batches(spark):

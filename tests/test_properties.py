@@ -3,11 +3,12 @@ codec and the vendored oracle's scoring invariants. No Spark session —
 these run fast and explore the input space the example tests can't."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from fusion_spark import oracle
-from fusion_spark.blocks import varint_decode, varint_encode
+from fusion_spark.blocks import CorruptBlockError, varint_decode, varint_encode
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
@@ -15,6 +16,26 @@ from fusion_spark.blocks import varint_decode, varint_encode
 def test_varint_roundtrip_property(values):
     arr = np.asarray(values, dtype=np.uint64)
     assert varint_decode(varint_encode(arr), len(arr)).tolist() == values
+
+
+@given(
+    st.lists(st.integers(min_value=0, max_value=2**63 - 1), min_size=1, max_size=300),
+    st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_varint_decode_rejects_truncated_and_extended_blobs(values, data):
+    """A blob cut short or carrying extra bytes fails with the decode error,
+    never a bare IndexError or a silently short/long array. A blob of exactly
+    `count` bytes is exempt: the one-byte fast path checks only the length."""
+    arr = np.asarray(values, dtype=np.uint64)
+    blob = varint_encode(arr)
+    cut = data.draw(st.integers(min_value=0, max_value=len(blob) - 1))
+    if cut != len(arr):
+        with pytest.raises(CorruptBlockError):
+            varint_decode(blob[:cut], len(arr))
+    extra = data.draw(st.binary(min_size=1, max_size=20))
+    with pytest.raises(CorruptBlockError):
+        varint_decode(blob + extra, len(arr))
 
 
 texts = st.lists(

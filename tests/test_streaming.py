@@ -102,6 +102,22 @@ def test_incremental_packed_compact_on_quiesce(spark, docs_df, queries_df, tmp_p
     wand_vs_exact(packed, 2)
 
 
+def test_incremental_packed_stream_empty_ingest(spark, tmp_path):
+    """A run that packs no shard — an empty landing dir, then one holding
+    only a zero-row file — returns the defined (None, "empty") result
+    instead of compact_if's no-shard ValueError, and writes no shard."""
+    import os
+
+    from fusion_spark.streaming import incremental_packed_stream
+
+    landing, store, ckpt = (str(tmp_path / d) for d in ("landing", "store", "ckpt"))
+    os.makedirs(landing)
+    assert incremental_packed_stream(spark, landing, store, ckpt) == (None, "empty")
+    spark.createDataFrame([], "doc_id long, text string").write.mode("append").parquet(landing)
+    assert incremental_packed_stream(spark, landing, store, ckpt) == (None, "empty")
+    assert not os.path.exists(store) or not os.listdir(store)
+
+
 def test_watermarked_append_matches_complete(spark, tmp_path):
     """The watermark+append file-sink variant emits exactly the complete-mode
     result for every real window once later sentinel batches advance the
