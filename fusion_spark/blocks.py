@@ -682,129 +682,9 @@ def _read_pack_manifest(store_dir: str) -> tuple[dict | None, dict[int, dict]]:
     return plan, done
 
 
-def pack_index_resumable(
-    spark: SparkSession,
-    index: BM25Index,
-    store_dir: str,
-    n_shards: int = 8,
-    segment_size: int | str = "auto",
-    compact: bool = False,
-) -> PackedIndex:
-    """Checkpointed pack — the pack-stage analogue of
-    `indexing.build_index_resumable` (the reference's resumable build has
-    no pack stage at all: `bm25.py` holds its dict index in memory).
-
-    The doc-id range splits into ``n_shards`` segment-ALIGNED spans; each
-    span packs to its own shard store under ``store_dir`` with a lineage
-    row appended to ``_manifest.jsonl``; completed shards are skipped on
-    restart, so a pack job killed at 90% re-does ~1/n_shards of the work,
-    not all of it. Returns the `merge_packed` union (disjointness guard
-    ON — alignment makes shard segment ranges disjoint by construction),
-    which is query-identical to a monolithic pack: blobs are per-(term,
-    segment) facts local to one shard, and df/idf/avgdl are recomputed
-    exactly at merge (BENCH.md r9: proven at ~1B postings / 4 shards and
-    at fan-in 64). ``compact=True`` additionally rewrites the union as a
-    single store at ``{store_dir}/compacted`` (block-level rewrite, no
-    re-encode — measured ~2.5× query-time file-open win) and returns that.
-
-    A resume must use the same (segment_size, n_shards) over the same
-    doc-id range as the original run — the manifest's plan line enforces
-    it loudly. ``segment_size="auto"`` on a resume adopts the plan line's
-    resolved size rather than re-deriving it from the live index, so a
-    slightly shifted df distribution cannot abort a resume whose caller
-    changed nothing.
-    """
-    import json
-    import os
-    import time
-
-    os.makedirs(store_dir, exist_ok=True)
-    plan, done = _read_pack_manifest(store_dir)
-
-    mx = index.docstats.agg(F.max("doc_id")).collect()[0][0]
-    id_range = (int(mx) + 1) if mx is not None else 0
-    if id_range == 0:
-        # an empty index would write a useless id_range=0 plan line and then
-        # crash inside merge_packed's no-paths parquet read (r9 ADVICE) —
-        # fail here with the actual cause, before touching the manifest
-        raise ValueError(
-            "pack_index_resumable: the index has no documents (empty "
-            "docstats → doc-id range 0) — nothing to pack. Build the index "
-            "over a non-empty corpus first."
-        )
-    if segment_size == "auto":
-        if plan is not None:
-            # resume: adopt the manifest plan's resolved size — re-deriving
-            # from the LIVE index can drift (df distribution shifts) and
-            # abort the plan-match check even though the caller changed
-            # nothing (r9 ADVICE); n_shards/id_range are still validated
-            seg = int(plan["segment_size"])
-        else:
-            seg = auto_segment_size(
-                index.termstats, index.n_docs, id_range=id_range
-            )
-    else:
-        seg = int(segment_size)
-    # segment-aligned shard width covering the id range
-    span = max((id_range + n_shards - 1) // n_shards, 1)
-    span = ((span + seg - 1) // seg) * seg
-    this_plan = {"segment_size": seg, "n_shards": n_shards,
-                 "id_range": id_range, "span": span}
-    if plan is not None and plan != this_plan:
-        raise ValueError(
-            "pack_index_resumable: resume with a DIFFERENT shard layout — "
-            f"manifest plan {plan} vs current {this_plan}. Finish the pack "
-            "with the original knobs or start a fresh store_dir."
-        )
-    if plan is None:
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({"plan": this_plan}) + "\n")
-
-    from fusion_spark.indexing import _finalize
-
-    shard_paths = []
-    for i in range(n_shards):
-        lo, hi = i * span, min((i + 1) * span, id_range)
-        if lo >= id_range:
-            break
-        path = os.path.join(store_dir, f"shard={i:04d}")
-        shard_paths.append(path)
-        if i in done:
-            continue
-        t0 = time.perf_counter()
-        si = _finalize(
-            index.postings.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            index.docstats.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)),
-            index.variant,
-        )
-        PackedIndex.from_index(si, segment_size=seg,
-                               num_partitions="auto").write(path)
-        # lineage metrics from the WRITTEN store's block metadata (columnar
-        # read of the tiny block-level columns, not a postings re-scan)
-        stats = spark.read.parquet(f"{path}/blocks").agg(
-            F.sum("n_docs").alias("n_postings"),
-            F.count("*").alias("n_blocks"),
-        ).collect()[0]
-        with open(_pack_manifest_path(store_dir), "a") as f:
-            f.write(json.dumps({
-                "shard": i, "status": "ok", "doc_lo": lo, "doc_hi": hi,
-                "n_postings": int(stats["n_postings"] or 0),
-                "n_blocks": int(stats["n_blocks"]),
-                "wall_sec": round(time.perf_counter() - t0, 3),
-            }) + "\n")
-
-    merged = merge_packed(spark, shard_paths)
-    if compact:
-        out = os.path.join(store_dir, "compacted")
-        merged.write(out)
-        return PackedIndex.read(spark, out)
-    return merged
-
-
 def pack_lineage(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Per-shard pack lineage/metrics table (mirrors `indexing.lineage`)."""
+    """Per-shard lineage/metrics table of a `build_packed_resumable` store
+    (mirrors `indexing.lineage`)."""
     import json
 
     _, done = _read_pack_manifest(store_dir)
@@ -879,7 +759,6 @@ def build_packed(
     variant: str = "bm25",
     segment_size: int | str = "auto",
     num_partitions: int | str | None = "auto",
-    strategy: str = "sorted",
     stats_sample_fraction: float = 0.02,
     seed: int = 7,
     timings: dict | None = None,
@@ -901,7 +780,7 @@ def build_packed(
     the same reason: `bm25.py:58-75` streams token counts straight into its
     in-memory index dicts with no intermediate store. Keep the two-phase
     path when you WANT the postings table (it is the resume point of
-    `build_index_resumable` and the input to `write_term_bucketed_store`).
+    `build_index_resumable`).
 
     Identity contract (tested): the resulting store is equal to the
     two-phase store over the same corpus — same block set byte-for-byte,
@@ -913,7 +792,7 @@ def build_packed(
         `_finalize`).
       * segment_size/num_partitions "auto" — resolved from a
         `stats_sample_fraction` doc-sampled df estimate
-        (`_estimate_pack_stats`; exact below 1,000 expected sample docs).
+        (`_estimate_pack_stats`; exact below 4,000 expected sample docs).
         Pass ints to skip the sampled pass entirely.
       * termstats — derived EXACTLY from the written blocks (df = Σ n_docs
         per term over the store: blocks partition the (term, doc) posting
@@ -984,7 +863,7 @@ def build_packed(
 
     blocks = _pack_postings(
         _postings_from_tokens(toks, "doc_id"),
-        segment_size, num_partitions, strategy,
+        segment_size, num_partitions, "sorted",
     )
     blocks.repartition("segment").write.mode("overwrite").parquet(
         f"{store_dir}/blocks"
@@ -1017,7 +896,6 @@ def build_packed_resumable(
     mode: str = "simple",
     variant: str = "bm25",
     segment_size: int | str = "auto",
-    strategy: str = "sorted",
     stats_sample_fraction: float = 0.02,
     seed: int = 7,
     compact: bool = False,
@@ -1028,18 +906,24 @@ def build_packed_resumable(
     postings table NOR a monolithic single job is acceptable (a build that
     dies at 90% must not re-tokenize everything).
 
-    Same manifest contract as `pack_index_resumable`: a plan line pins
-    (segment_size, n_shards, id_range, span); a resume with different knobs
-    fails loudly; ``segment_size="auto"`` on resume adopts the plan's
-    resolved size. Each shard filters the corpus by doc-id range (parquet
-    range pushdown — a shard scans only its rows), runs the fused build
-    into its own sub-store, and appends a lineage row with posting/block
-    counts from the written store's metadata columns. The returned index is
-    the `merge_packed` union (disjoint by construction — spans are
-    segment-aligned); df/idf/avgdl are recomputed exactly at merge, so the
-    result is query-identical to a monolithic build. ``compact=True``
-    rewrites the union into ``{store_dir}/compacted`` (block-level, no
-    re-encode) and returns that."""
+    Manifest contract (`{store_dir}/_manifest.jsonl`, read back by
+    `pack_lineage`): a plan line pins (segment_size, n_shards, id_range,
+    span); a resume with different knobs fails loudly instead of mixing
+    shard layouts; ``segment_size="auto"`` on resume adopts the plan's
+    resolved size rather than re-deriving it from the live corpus, so a
+    shifted df distribution cannot abort a resume whose caller changed
+    nothing. An empty corpus raises before the plan line is written.
+
+    Each shard filters the corpus by doc-id range (parquet range pushdown —
+    a shard scans only its rows), runs the fused build into its own
+    sub-store, and appends a lineage row with posting/block counts from the
+    written store's metadata columns; shards with a row are skipped on
+    restart, so a build killed at 90% redoes ~1/n_shards of the work. The
+    returned index is the `merge_packed` union (disjoint by construction —
+    spans are segment-aligned); df/idf/avgdl are recomputed exactly at
+    merge, so the result is query-identical to a monolithic build.
+    ``compact=True`` rewrites the union into ``{store_dir}/compacted``
+    (block-level, no re-encode) and returns that."""
     import json
     import os
     import time
@@ -1114,7 +998,7 @@ def build_packed_resumable(
             shard_docs,
             path,
             mode=mode, variant=variant, segment_size=seg,
-            num_partitions="auto", strategy=strategy,
+            num_partitions="auto",
             stats_sample_fraction=stats_sample_fraction, seed=seed,
         )
         stats = spark.read.parquet(f"{path}/blocks").agg(
@@ -1140,9 +1024,10 @@ def build_packed_resumable(
 def compact_if(
     spark: SparkSession, store_dir: str, threshold_files: int = 48
 ) -> tuple[PackedIndex, str]:
-    """Compact-on-quiesce for a sharded store (`pack_index_resumable`
-    layout): serve the merged union while it is cheap, compact when the
-    accumulated file count makes per-query open overhead matter.
+    """Compact-on-quiesce for a sharded store (the `shard=*` layout of
+    `build_packed_resumable` and `incremental_packed_stream`): serve the
+    merged union while it is cheap, compact when the accumulated file count
+    makes per-query open overhead matter.
 
     BENCH.md r9 measured the shape this automates: a merged union costs
     ~2.5× per-query file-open overhead vs monolithic, and the block-level
@@ -1176,7 +1061,7 @@ def compact_if(
     if not shard_paths:
         raise ValueError(
             f"compact_if: no shard=* stores under {store_dir!r} — expected "
-            "a pack_index_resumable layout."
+            "a build_packed_resumable layout."
         )
     files = [
         f

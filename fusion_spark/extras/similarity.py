@@ -329,8 +329,8 @@ def ivf_cosine_topk(
     """IVF approximate top-k: corpus vectors are inverted-listed by nearest
     centroid; each query scans only its `n_probe` nearest centroids' lists
     (≈ n_probe/n_centroids of the corpus). At cluster scale the assignment
-    is a write-time partition column — queries prune partitions exactly like
-    the term-bucketed posting store. Set broadcast_queries=False for query
+    is a write-time partition column, so queries prune whole partition
+    directories before any file is opened. Set broadcast_queries=False for query
     batches too large to broadcast (both sides then shuffle on centroid).
     `lloyd_iters=0` keeps the deterministic seed centroids (the n lowest
     vec_ids) — no distributed float-mean state, so the result is exactly

@@ -646,77 +646,70 @@ def test_wand_census_collect_is_bounded(spark, docs_df):
         wand_search(packed, qs, k=2, max_queries_per_chunk=2, max_chunks_per_plan=2)
 
 
-def test_pack_index_resumable_identity_and_skip(spark, docs_df, queries_df, tmp_path):
-    """r9: the pack-stage resumability analogue of build_index_resumable —
-    WAND identity with the monolithic pack, completed shards skipped on
-    restart (mtimes untouched), lineage table populated, and a resume with
-    different knobs rejected loudly via the manifest's plan line."""
+def test_build_packed_resumable_redoes_only_dead_shard(
+    spark, docs_df, queries_df, tmp_path
+):
+    """A dead run = some shards missing from the manifest: drop the last
+    shard's lineage row and its store; the resume rebuilds ONLY that shard
+    (the others keep their mtimes) and stays WAND-identical to the
+    monolithic pack. The lineage table accounts for every posting."""
+    import json as _json
     import os
+    import shutil as _shutil
     import time as _time
 
-    from fusion_spark.blocks import pack_index_resumable, pack_lineage
+    from fusion_spark.blocks import build_packed_resumable, pack_lineage
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "rstore")
-    merged = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
+    merged = build_packed_resumable(
+        spark, docs_df, store, n_shards=3, text_col="content", segment_size=16
+    )
     mono = PackedIndex.from_index(idx, segment_size=16)
-    qs = queries_df
 
     def topk(p):
         return sorted(
             (r["qid"], r["rank"], r["doc_id"], round(r["score"], 9))
-            for r in wand_search(p, qs, k=5, k1=2.5, b=0.2).collect()
+            for r in wand_search(p, queries_df, k=5, k1=2.5, b=0.2).collect()
         )
 
     assert topk(merged) == topk(mono)
-    assert merged.n_docs == mono.n_docs
 
     lin = pack_lineage(spark, store).collect()
     assert [r["shard"] for r in lin] == sorted(r["shard"] for r in lin)
     assert sum(r["n_postings"] for r in lin) == idx.postings.count()
 
-    # restart: every shard complete -> no shard store is rewritten
     shard_dirs = sorted(
         os.path.join(store, d) for d in os.listdir(store) if d.startswith("shard=")
     )
     assert len(shard_dirs) == len(lin) >= 2
     mtimes = {d: os.path.getmtime(os.path.join(d, "meta.json")) for d in shard_dirs}
-    _time.sleep(0.05)
-    again = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
-    assert topk(again) == topk(mono)
-    for d, m in mtimes.items():
-        assert os.path.getmtime(os.path.join(d, "meta.json")) == m
 
-    # a dead run = some shards missing from the manifest: drop the last
-    # shard's lineage row and its store; resume must redo ONLY that shard
     manifest = os.path.join(store, "_manifest.jsonl")
     lines = [ln for ln in open(manifest).read().splitlines() if ln.strip()]
-    import json as _json
-
     keep = [ln for ln in lines if _json.loads(ln).get("shard") != lin[-1]["shard"]]
     with open(manifest, "w") as f:
         f.write("\n".join(keep) + "\n")
-    import shutil as _shutil
-
     _shutil.rmtree(shard_dirs[-1])
-    resumed = pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
+    _time.sleep(0.05)
+    resumed = build_packed_resumable(
+        spark, docs_df, store, n_shards=3, text_col="content", segment_size=16
+    )
     assert topk(resumed) == topk(mono)
+    assert os.path.exists(os.path.join(shard_dirs[-1], "meta.json"))
     for d, m in list(mtimes.items())[:-1]:
         assert os.path.getmtime(os.path.join(d, "meta.json")) == m
 
-    # layout drift is rejected, not silently mixed
-    with pytest.raises(ValueError, match="DIFFERENT shard layout"):
-        pack_index_resumable(spark, idx, store, n_shards=4, segment_size=16)
 
-
-def test_pack_index_resumable_compact(spark, docs_df, queries_df, tmp_path):
+def test_build_packed_resumable_compact(spark, docs_df, queries_df, tmp_path):
     """compact=True returns a single re-packed store with identical top-k."""
-    from fusion_spark.blocks import pack_index_resumable
+    from fusion_spark.blocks import build_packed_resumable
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "cstore")
-    compacted = pack_index_resumable(
-        spark, idx, store, n_shards=2, segment_size=16, compact=True
+    compacted = build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16,
+        compact=True,
     )
     mono = PackedIndex.from_index(idx, segment_size=16)
     a = sorted(
@@ -741,11 +734,13 @@ def test_compact_if_thresholds_and_idempotence(spark, docs_df, queries_df, tmp_p
     import glob
     import os
 
-    from fusion_spark.blocks import compact_if, pack_index_resumable
+    from fusion_spark.blocks import build_packed_resumable, compact_if
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "qstore")
-    pack_index_resumable(spark, idx, store, n_shards=3, segment_size=16)
+    build_packed_resumable(
+        spark, docs_df, store, n_shards=3, text_col="content", segment_size=16
+    )
     n_files = len(glob.glob(os.path.join(store, "shard=*", "blocks", "*.parquet")))
     assert n_files >= 2
     mono = PackedIndex.from_index(idx, segment_size=16)
@@ -811,7 +806,9 @@ def test_compact_if_concurrent_wave_between_decision_and_stamp(
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "cstore")
-    B.pack_index_resumable(spark, idx, store, n_shards=2, segment_size=16)
+    B.build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
 
     # the "concurrent" wave: a disjoint higher-id shard prepared up front
     late_docs = docs_df.select(
@@ -851,22 +848,20 @@ def test_compact_if_concurrent_wave_between_decision_and_stamp(
     assert any(d >= 64 for d in served_docs) or p2.n_docs == idx.n_docs + late_idx.n_docs
 
 
-def test_pack_index_resumable_empty_index_raises(spark, tmp_path):
-    """r9 ADVICE: an empty index (no docstats → id_range 0) must fail with
+def test_build_packed_resumable_empty_corpus_raises(spark, tmp_path):
+    """r9 ADVICE: an empty corpus (no doc ids → id_range 0) must fail with
     the actual cause BEFORE writing a plan line, not crash later inside
     merge_packed's no-paths parquet read."""
     import os
 
-    from fusion_spark.blocks import pack_index_resumable
+    from fusion_spark.blocks import build_packed_resumable
 
-    empty = build_index(
-        spark.createDataFrame([], "doc_id long, content string"),
-        doc_id_col="doc_id",
-        text_col="content",
-    )
+    empty = spark.createDataFrame([], "doc_id long, content string")
     store = str(tmp_path / "estore")
-    with pytest.raises(ValueError, match="no documents"):
-        pack_index_resumable(spark, empty, store, n_shards=2, segment_size=16)
+    with pytest.raises(ValueError, match="corpus is empty"):
+        build_packed_resumable(
+            spark, empty, store, n_shards=2, text_col="content", segment_size=16
+        )
     assert not os.path.exists(os.path.join(store, "_manifest.jsonl"))
 
 
@@ -894,21 +889,26 @@ def test_merge_packed_guard_rejects_unparseable_store_paths(spark, docs_df, tmp_
         merge_packed(spark, [bad])
 
 
-def test_pack_index_resumable_auto_adopts_manifest_segment_size(
+def test_build_packed_resumable_auto_adopts_manifest_segment_size(
     spark, docs_df, queries_df, tmp_path
 ):
     """r9 ADVICE: a resume with segment_size='auto' adopts the manifest
-    plan's resolved size instead of re-deriving it from the live index —
+    plan's resolved size instead of re-deriving it from the live corpus —
     re-derivation drifts with the df distribution and aborted resumes whose
     caller changed nothing."""
-    from fusion_spark.blocks import pack_index_resumable
+    from fusion_spark.blocks import build_packed_resumable
 
     idx = build_index(docs_df, doc_id_col="doc_id", text_col="content")
     store = str(tmp_path / "astore")
     # original run pins segment_size=16 in the plan line; auto would derive
     # something else entirely (the 4096 floor at this corpus size)
-    pack_index_resumable(spark, idx, store, n_shards=2, segment_size=16)
-    resumed = pack_index_resumable(spark, idx, store, n_shards=2, segment_size="auto")
+    build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content", segment_size=16
+    )
+    resumed = build_packed_resumable(
+        spark, docs_df, store, n_shards=2, text_col="content",
+        segment_size="auto",
+    )
     assert resumed.segment_size == 16
     mono = PackedIndex.from_index(idx, segment_size=16)
     a = sorted(

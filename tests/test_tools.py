@@ -546,3 +546,44 @@ def test_bench_ann_store_file_stats(tmp_path):
         str(tmp_path / "vectors"), {"3", "9"}, "sig")
     assert (ft, bt, fk, bk) == (4, 750, 3, 550)
     assert by_part == {"3": 150, "7": 200, "9": 400}
+
+
+# ------------- dangling-import guard (no SparkSession needed) -------------
+
+_ROOT = os.path.join(os.path.dirname(__file__), "..")
+
+
+def test_entry_scripts_import_only_existing_package_names():
+    """Every `from fusion_spark[.<mod>] import <name>` in the tools, job
+    scripts, bench drivers, perfbench and the driver entry module — at any
+    nesting level, so function-local imports count — must name something
+    that exists. These files are not imported by the unit tests, so
+    deleting a library symbol would otherwise leave them failing only when
+    someone next runs them."""
+    import ast
+    import glob
+    import importlib
+
+    patterns = ["tools/*.py", "scripts/*.py", "bench*.py", "perfbench/*.py",
+                "__spark_entry__.py"]
+    files = sorted(f for p in patterns for f in glob.glob(os.path.join(_ROOT, p)))
+    checked, missing = 0, []
+    for path in files:
+        with open(path) as f:
+            tree = ast.parse(f.read(), filename=path)
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.level == 0
+                    and node.module
+                    and node.module.split(".")[0] == "fusion_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                checked += 1
+                # a name is either a module attribute or a submodule
+                if not (hasattr(mod, alias.name) or (
+                        hasattr(mod, "__path__") and importlib.util.find_spec(
+                            f"{node.module}.{alias.name}") is not None)):
+                    rel = os.path.relpath(path, _ROOT)
+                    missing.append(f"{rel}:{node.lineno} {node.module}.{alias.name}")
+    assert checked > 0
+    assert not missing, missing

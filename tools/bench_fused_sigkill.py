@@ -1,9 +1,9 @@
 """SIGKILL-resume proof for the FUSED sharded build (r10 verdict #7).
 
-The two-phase path (`pack_index_resumable`) has a real kill-9 proof at
-99.2M postings (BENCH.md r9). This repeats the experiment on
-`build_packed_resumable` — the fused corpus→store build that is now the
-shipping default — at the same scale:
+BENCH.md r9 records a kill-9 proof of the two-phase resumable pack (since
+removed) at 99.2M postings. This repeats the experiment on
+`build_packed_resumable` — the fused corpus→store build, the one resumable
+pack path — at the same scale:
 
   1. generate the deterministic 1.44M-doc corpus (same generator as
      tools/bench_fused_build.py; ~99M distinct postings);

@@ -79,7 +79,7 @@ def main() -> None:
     mono = PackedIndex.read(spark, f"{out_dir}/mono")
 
     # one pack job per shard — the per-ingest-job shape; shards live under
-    # one store root in the pack_index_resumable shard=* layout so the
+    # one store root in the build_packed_resumable shard=* layout so the
     # compact_if quiesce hook can evaluate the same store below
     t0 = time.perf_counter()
     shard_paths = []
